@@ -338,138 +338,142 @@ object StructureFormats {
       StructField("__idx", LongType)))
     val indexed = spark.createDataFrame(rdd, schema)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // category lines: bounded driver state, one per block column
-    val catLines = indexed.filter(col("value").startsWith(category))
-      .orderBy("__idx").collect()
-    require(catLines.nonEmpty,
-      s"no '$category' block in $path")
-    val firstIdx = catLines.head.getLong(1)
-    // the contiguous header run starting at the block head — a later
-    // re-occurrence of the category elsewhere in the file is not part
-    // of this block (the reference stops at the first non-matching
-    // line)
-    val run = catLines.zipWithIndex
-      .takeWhile { case (r, i) => r.getLong(1) == firstIdx + i }
-      .map(_._1)
-    val lastHeaderIdx = firstIdx + run.length - 1
-    val maxIdx = indexed.agg(max("__idx")).head.getLong(0)
-    if (lastHeaderIdx == maxIdx && run.length == catLines.length)
-      throw new IllegalStateException(
-        s"'$category' block runs to end-of-file in $path " +
-          "(the reference raises StopIteration here)")
-    val prevLine =
-      if (firstIdx == 0) ""
-      else indexed.filter(col("__idx") === firstIdx - 1)
-        .head().getString(0)
-    val stripRstrip = (s: String) => s.replace(category, "")
-      .replaceAll("\\s+$", "")
-
-    // '…'-quoted tokens (possibly containing whitespace) or bare runs
-    // of non-whitespace — pandas delim_whitespace + quotechar "'"
-    val tokenRe = "'[^']*'|\\S+"
-    def unquote(t: Column): Column =
-      when(t.rlike("^'.*'$"), t.substr(lit(2), length(t) - 2)).otherwise(t)
-
-    val parsedStrings: DataFrame =
-      if (prevLine.contains("loop_")) {
-        val header = run.map(r => stripRstrip(r.getString(0)))
-        // body: the slice between the header run and the '#'
-        // terminator; finding the terminator is one filtered
-        // min-aggregate over the cached index
-        val termRow = indexed.filter(col("__idx") > lastHeaderIdx &&
-            col("value").startsWith("#"))
-          .agg(min("__idx")).head()
-        if (termRow.isNullAt(0)) throw new IllegalStateException(
-          s"unterminated '$category' loop_ block in $path " +
+    // the cache serves only the probes below; the returned frame
+    // re-derives the index from the file, so release it on every exit
+    // rather than leak one cached frame per call into the session
+    try {
+      // category lines: bounded driver state, one per block column
+      val catLines = indexed.filter(col("value").startsWith(category))
+        .orderBy("__idx").collect()
+      require(catLines.nonEmpty,
+        s"no '$category' block in $path")
+      val firstIdx = catLines.head.getLong(1)
+      // the contiguous header run starting at the block head — a later
+      // re-occurrence of the category elsewhere in the file is not part
+      // of this block (the reference stops at the first non-matching
+      // line)
+      val run = catLines.zipWithIndex
+        .takeWhile { case (r, i) => r.getLong(1) == firstIdx + i }
+        .map(_._1)
+      val lastHeaderIdx = firstIdx + run.length - 1
+      val maxIdx = indexed.agg(max("__idx")).head.getLong(0)
+      if (lastHeaderIdx == maxIdx && run.length == catLines.length)
+        throw new IllegalStateException(
+          s"'$category' block runs to end-of-file in $path " +
             "(the reference raises StopIteration here)")
-        val endIdx = termRow.getLong(0)
-        var body = indexed
-          .filter(col("__idx") > lastHeaderIdx && col("__idx") < endIdx)
-          .withColumn("value", translate(col("value"), "\"", "'"))
-        if (requireIndex) {
-          // a record = an int-indexed line plus the following
-          // non-indexed line(s), concatenated with NO separator (the
-          // reference strips the newline of indexed lines and
-          // ''.joins); a record boundary falls after every
-          // non-indexed line
-          import org.apache.spark.sql.expressions.Window
-          val keepsNewline = !regexp_like(
-            substring(col("value"), 1, 2), lit("^\\s*[+-]?\\d+\\s*$"))
-          val w = Window.orderBy("__idx")
-            .rowsBetween(Window.unboundedPreceding, -1)
-          body = body
-            // guarded (r18): the running record-boundary sum is a
-            // per-FILE parse (one table's lines) — assert the global
-            // frame stays file-sized
-            .withColumn("__rec", graft.operators.WindowOps.guardedGlobalFrame(
-              coalesce(sum(keepsNewline.cast("long")).over(w), lit(0L)),
-              "the indexed-record parse's per-file line table", 1L << 24))
-            .groupBy("__rec")
-            .agg(array_join(transform(
-              array_sort(collect_list(struct(col("__idx"), col("value")))),
-              s => s.getField("value")), "").as("value"))
-        }
-        body
-          .withColumn("__toks",
-            regexp_extract_all(col("value"), lit(tokenRe), lit(0)))
-          .select(header.zipWithIndex.map { case (n, i) =>
-            // try_: a short row (fewer tokens than headers) is a null
-            // cell, not an ANSI index error — pandas NaN semantics
-            unquote(try_element_at(col("__toks"), lit(i + 1))).as(n)
-          }: _*)
-      } else {
-        // key-value form: headers AND data both come from the
-        // category lines themselves; the row is metadata-sized by
-        // construction (one value per column), so it is assembled on
-        // the driver like the reference's ' '.join
-        val pairs = run.map { r =>
-          val s = stripRstrip(r.getString(0))
-          val kv = s.split("\\s+", 2)
-          require(kv.length == 2,
-            s"malformed key-value line '${r.getString(0)}' in $category block")
-          (kv(0), kv(1))
-        }
-        val joined = pairs.map(_._2).mkString(" ").replace("\"", "'")
-        val toks = java.util.regex.Pattern.compile(tokenRe).matcher(joined)
-        val values = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (toks.find()) values += {
-          val t = toks.group()
-          if (t.length >= 2 && t.startsWith("'") && t.endsWith("'"))
-            t.substring(1, t.length - 1)
-          else t
-        }
-        val header = pairs.map(_._1)
-        val row = Row.fromSeq(header.indices.map(i =>
-          if (i < values.length) values(i) else null))
-        spark.createDataFrame(
-          new java.util.ArrayList[Row](java.util.Arrays.asList(row)),
-          StructType(header.map(h => StructField(h, StringType)).toArray))
-      }
+      val prevLine =
+        if (firstIdx == 0) ""
+        else indexed.filter(col("__idx") === firstIdx - 1)
+          .head().getString(0)
+      val stripRstrip = (s: String) => s.replace(category, "")
+        .replaceAll("\\s+$", "")
 
-    // pandas-style dtype inference: one bounded aggregate (three
-    // booleans per column) over the parsed strings
-    val intRe = "^[+-]?\\d+$"
-    val numRe = "^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$"
-    val cols = parsedStrings.columns
-    val probes = cols.zipWithIndex.flatMap { case (c, i) => Seq(
-      bool_and(col(c).isNull || col(c).rlike(intRe)).as(s"__i$i"),
-      bool_and(col(c).isNull || col(c).rlike(numRe)).as(s"__n$i"),
-      bool_and(col(c).isNull).as(s"__z$i"),
-      bool_or(col(c).isNull).as(s"__h$i"))
-    }
-    val p = parsedStrings.agg(probes.head, probes.tail: _*).head()
-    def flag(name: String): Boolean = !p.isNullAt(p.fieldIndex(name)) &&
-      p.getBoolean(p.fieldIndex(name))
-    parsedStrings.select(cols.zipWithIndex.map { case (c, i) =>
-      val (allInt, allNum) = (flag(s"__i$i"), flag(s"__n$i"))
-      val (allNull, hasNull) = (flag(s"__z$i"), flag(s"__h$i"))
-      val qc = col(parsedStrings.columns(i))
-      if (allNull) qc.cast("double").as(c) // pandas: all-NaN → float64
-      else if (allInt && !hasNull) qc.cast("long").as(c)
-      else if (allInt || allNum) qc.cast("double").as(c)
-      else qc.as(c)
-    }: _*)
+      // '…'-quoted tokens (possibly containing whitespace) or bare runs
+      // of non-whitespace — pandas delim_whitespace + quotechar "'"
+      val tokenRe = "'[^']*'|\\S+"
+      def unquote(t: Column): Column =
+        when(t.rlike("^'.*'$"), t.substr(lit(2), length(t) - 2)).otherwise(t)
+
+      val parsedStrings: DataFrame =
+        if (prevLine.contains("loop_")) {
+          val header = run.map(r => stripRstrip(r.getString(0)))
+          // body: the slice between the header run and the '#'
+          // terminator; finding the terminator is one filtered
+          // min-aggregate over the cached index
+          val termRow = indexed.filter(col("__idx") > lastHeaderIdx &&
+              col("value").startsWith("#"))
+            .agg(min("__idx")).head()
+          if (termRow.isNullAt(0)) throw new IllegalStateException(
+            s"unterminated '$category' loop_ block in $path " +
+              "(the reference raises StopIteration here)")
+          val endIdx = termRow.getLong(0)
+          var body = indexed
+            .filter(col("__idx") > lastHeaderIdx && col("__idx") < endIdx)
+            .withColumn("value", translate(col("value"), "\"", "'"))
+          if (requireIndex) {
+            // a record = an int-indexed line plus the following
+            // non-indexed line(s), concatenated with NO separator (the
+            // reference strips the newline of indexed lines and
+            // ''.joins); a record boundary falls after every
+            // non-indexed line
+            import org.apache.spark.sql.expressions.Window
+            val keepsNewline = !regexp_like(
+              substring(col("value"), 1, 2), lit("^\\s*[+-]?\\d+\\s*$"))
+            val w = Window.orderBy("__idx")
+              .rowsBetween(Window.unboundedPreceding, -1)
+            body = body
+              // guarded (r18): the running record-boundary sum is a
+              // per-FILE parse (one table's lines) — assert the global
+              // frame stays file-sized
+              .withColumn("__rec", graft.operators.WindowOps.guardedGlobalFrame(
+                coalesce(sum(keepsNewline.cast("long")).over(w), lit(0L)),
+                "the indexed-record parse's per-file line table", 1L << 24))
+              .groupBy("__rec")
+              .agg(array_join(transform(
+                array_sort(collect_list(struct(col("__idx"), col("value")))),
+                s => s.getField("value")), "").as("value"))
+          }
+          body
+            .withColumn("__toks",
+              regexp_extract_all(col("value"), lit(tokenRe), lit(0)))
+            .select(header.zipWithIndex.map { case (n, i) =>
+              // try_: a short row (fewer tokens than headers) is a null
+              // cell, not an ANSI index error — pandas NaN semantics
+              unquote(try_element_at(col("__toks"), lit(i + 1))).as(n)
+            }: _*)
+        } else {
+          // key-value form: headers AND data both come from the
+          // category lines themselves; the row is metadata-sized by
+          // construction (one value per column), so it is assembled on
+          // the driver like the reference's ' '.join
+          val pairs = run.map { r =>
+            val s = stripRstrip(r.getString(0))
+            val kv = s.split("\\s+", 2)
+            require(kv.length == 2,
+              s"malformed key-value line '${r.getString(0)}' in $category block")
+            (kv(0), kv(1))
+          }
+          val joined = pairs.map(_._2).mkString(" ").replace("\"", "'")
+          val toks = java.util.regex.Pattern.compile(tokenRe).matcher(joined)
+          val values = scala.collection.mutable.ArrayBuffer.empty[String]
+          while (toks.find()) values += {
+            val t = toks.group()
+            if (t.length >= 2 && t.startsWith("'") && t.endsWith("'"))
+              t.substring(1, t.length - 1)
+            else t
+          }
+          val header = pairs.map(_._1)
+          val row = Row.fromSeq(header.indices.map(i =>
+            if (i < values.length) values(i) else null))
+          spark.createDataFrame(
+            new java.util.ArrayList[Row](java.util.Arrays.asList(row)),
+            StructType(header.map(h => StructField(h, StringType)).toArray))
+        }
+
+      // pandas-style dtype inference: one bounded aggregate (three
+      // booleans per column) over the parsed strings
+      val intRe = "^[+-]?\\d+$"
+      val numRe = "^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$"
+      val cols = parsedStrings.columns
+      val probes = cols.zipWithIndex.flatMap { case (c, i) => Seq(
+        bool_and(col(c).isNull || col(c).rlike(intRe)).as(s"__i$i"),
+        bool_and(col(c).isNull || col(c).rlike(numRe)).as(s"__n$i"),
+        bool_and(col(c).isNull).as(s"__z$i"),
+        bool_or(col(c).isNull).as(s"__h$i"))
+      }
+      val p = parsedStrings.agg(probes.head, probes.tail: _*).head()
+      def flag(name: String): Boolean = !p.isNullAt(p.fieldIndex(name)) &&
+        p.getBoolean(p.fieldIndex(name))
+      parsedStrings.select(cols.zipWithIndex.map { case (c, i) =>
+        val (allInt, allNum) = (flag(s"__i$i"), flag(s"__n$i"))
+        val (allNull, hasNull) = (flag(s"__z$i"), flag(s"__h$i"))
+        val qc = col(parsedStrings.columns(i))
+        if (allNull) qc.cast("double").as(c) // pandas: all-NaN → float64
+        else if (allInt && !hasNull) qc.cast("long").as(c)
+        else if (allInt || allNum) qc.cast("double").as(c)
+        else qc.as(c)
+      }: _*)
+    } finally indexed.unpersist()
   }
 
   /** Add '<atom>.<altloc>' disambiguation ids (plain atom id when no

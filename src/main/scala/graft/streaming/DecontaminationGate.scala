@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming DECONTAMINATION gate — fuzzy eval-set leakage removal
   * ([[Dedup.fuzzyDecontaminate]]) as an always-on ingest stage: each
@@ -31,14 +30,15 @@ import org.apache.spark.sql.streaming.Trigger
   * [[Dedup.minhashSketch]]; the hash-checked driver query passes
   * the md5-portable family so DuckDB replays the whole gate.
   *
-  * foreachBatch (the [[QualityGate]] harness): three exactly-once
+  * foreachBatch (the [[FileGate]] skeleton): three exactly-once
   * outputs per batch — verdict, admitted docs (full input schema),
   * quarantine evidence — each under `batch=<id>/` with overwrite
   * mode so a crashed-and-retried micro-batch rewrites the same
   * paths. Restart-safe: same outDir + checkpointDir resumes,
   * committed files are skipped; `reset = true` destroys prior
-  * state; a non-empty outDir that is not prior gate state fails
-  * fast (the shared guards).
+  * state; a non-empty outDir that is not prior gate state, or a
+  * stale checkpoint with a fresh outDir, fails fast (the shared
+  * guards).
   *
   * Scale shape: per batch everything is batch-local — the bench
   * side broadcasts twice inside [[Dedup.fuzzyDecontaminate]] (band
@@ -78,71 +78,32 @@ object DecontaminationGate {
                           fileGlob: String = "*.parquet",
                           reset: Boolean = false)
   : (DataFrame, DataFrame, DataFrame) = {
-    val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
     val verdictDir = s"$outDir/verdict"
-    if (reset) {
-      Seq(outDir, checkpointDir).foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        if (fs.exists(hp)) fs.delete(hp, true)
-      }
-    }
-    val resuming = fs.exists(new org.apache.hadoop.fs.Path(verdictDir))
-    if (!resuming) {
-      if (fs.exists(outPath) && fs.listStatus(outPath).nonEmpty)
-        throw new IllegalArgumentException(
-          s"outDir '$outDir' is non-empty and not prior gate state " +
-            "(no verdict/ table); pass reset = true to overwrite it")
-      val ckptPath = new org.apache.hadoop.fs.Path(checkpointDir)
-      val ckptFs = ckptPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (ckptFs.exists(ckptPath) && ckptFs.listStatus(ckptPath).nonEmpty)
-        throw new IllegalArgumentException(
-          s"checkpointDir '$checkpointDir' has streaming state but " +
-            s"outDir '$outDir' has no verdict table — a cold start " +
-            "here would skip every already-committed input file; " +
-            "pass reset = true to start clean")
-    }
-    val bench = benchIndex
-    val schema = spark.read
-      .option("pathGlobFilter", fileGlob).parquet(docsDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docsDir)
-    EventStreams.withStatefulShuffle(spark) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val docs = batch.persist()
-          // materialize the batch sketch ONCE: the probe references
-          // it three times (band keys, verify fetch, report ids) and
-          // the signature tree is the expensive part — the same
-          // localCheckpoint discipline the batch query uses
-          val batchSketch = sketch(docs).localCheckpoint()
-          val verdict = Dedup.fuzzyDecontaminate(
-            batchSketch, bench, threshold, numHashes, bands)
-          verdict.write.mode("overwrite")
-            .parquet(s"$verdictDir/batch=$batchId")
-          // re-read the committed verdict rather than recompute: the
-          // band/verify/argmax pipeline ran once
-          val v = spark.read.parquet(s"$verdictDir/batch=$batchId")
-          docs.join(
-              v.filter(col("contaminated"))
-                .select(col("id").as("__cid")),
-              docs(idCol) === col("__cid"), "left_anti")
-            .write.mode("overwrite")
-            .parquet(s"$outDir/admitted/batch=$batchId")
+    FileGate.run(spark, docsDir, outDir, checkpointDir, fileGlob, reset,
+        marker = "verdict/") { (batch, batchId) =>
+      val docs = batch.persist()
+      // materialize the batch sketch ONCE: the probe references
+      // it three times (band keys, verify fetch, report ids) and
+      // the signature tree is the expensive part — the same
+      // localCheckpoint discipline the batch query uses
+      val batchSketch = sketch(docs).localCheckpoint()
+      val verdict = Dedup.fuzzyDecontaminate(
+        batchSketch, benchIndex, threshold, numHashes, bands)
+      verdict.write.mode("overwrite")
+        .parquet(s"$verdictDir/batch=$batchId")
+      // re-read the committed verdict rather than recompute: the
+      // band/verify/argmax pipeline ran once
+      val v = spark.read.parquet(s"$verdictDir/batch=$batchId")
+      docs.join(
           v.filter(col("contaminated"))
-            .write.mode("overwrite")
-            .parquet(s"$outDir/quarantine/batch=$batchId")
-          docs.unpersist()
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+            .select(col("id").as("__cid")),
+          docs(idCol) === col("__cid"), "left_anti")
+        .write.mode("overwrite")
+        .parquet(s"$outDir/admitted/batch=$batchId")
+      v.filter(col("contaminated"))
+        .write.mode("overwrite")
+        .parquet(s"$outDir/quarantine/batch=$batchId")
+      docs.unpersist()
     }
     (spark.read.parquet(verdictDir).drop("batch"),
       spark.read.parquet(s"$outDir/admitted").drop("batch"),

@@ -334,7 +334,7 @@ object EventStreams {
     * numbers (total-variation ticks, directional OOV mass) land in a
     * table a dashboard or circuit-breaker tails. Per-batch rows are
     * a BATCH aggregation over the micro-batch, so the leg is a
-    * foreachBatch loop (the QualityGate shape): each batch writes
+    * foreachBatch loop (the [[FileGate]] skeleton): each batch writes
     * `outDir/batch=N` with mode overwrite — a crash-replayed batch
     * OVERWRITES its own dir, never appends a duplicate row
     * (exactly-once by idempotence), and the checkpoint makes a
@@ -343,8 +343,8 @@ object EventStreams {
     * [[graft.operators.Corpus.driftAgainstModel]] over that batch's
     * files bit-for-bit (spec-pinned).
     *
-    * Cold-start guards mirror QualityGate: a non-empty outDir that
-    * is not prior drift state, or a checkpoint without its output
+    * Cold-start guards are the [[FileGate]] ones: a non-empty outDir
+    * with no `batch=` dirs, or a checkpoint without its output
     * table, fails fast instead of silently skipping committed files.
     *
     * @param maxFilesPerTrigger bound files per micro-batch (None =
@@ -358,47 +358,12 @@ object EventStreams {
                   fileGlob: String = "*.parquet",
                   maxFilesPerTrigger: Option[Int] = None,
                   reset: Boolean = false): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    if (reset) {
-      Seq(outDir, checkpointDir).foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        if (fs.exists(hp)) fs.delete(hp, true)
-      }
+    FileGate.run(spark, docsDir, outDir, checkpointDir, fileGlob, reset,
+        marker = "batch=", maxFilesPerTrigger = maxFilesPerTrigger,
+        statefulShuffle = false) { (batch, batchId) =>
+      graft.operators.Corpus.driftAgainstModel(batch, model, textCol)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     }
-    val resuming = fs.exists(outPath) && fs.listStatus(outPath)
-      .exists(_.getPath.getName.startsWith("batch="))
-    if (!resuming) {
-      if (fs.exists(outPath) && fs.listStatus(outPath).nonEmpty)
-        throw new IllegalArgumentException(
-          s"outDir '$outDir' is non-empty and not prior drift state " +
-            "(no batch= dirs); pass reset = true to overwrite it")
-      val ckptPath = new org.apache.hadoop.fs.Path(checkpointDir)
-      if (fs.exists(ckptPath) && fs.listStatus(ckptPath).nonEmpty)
-        throw new IllegalArgumentException(
-          s"checkpointDir '$checkpointDir' has streaming state but " +
-            s"outDir '$outDir' has no drift table — a cold start " +
-            "here would skip every already-committed input file; " +
-            "pass reset = true to start clean")
-    }
-    val schema = spark.read
-      .option("pathGlobFilter", fileGlob).parquet(docsDir).schema
-    var reader = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob)
-    maxFilesPerTrigger.foreach(n =>
-      reader = reader.option("maxFilesPerTrigger", n.toString))
-    val stream = reader.parquet(docsDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Corpus.driftAgainstModel(batch, model, textCol)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     spark.read.parquet(outDir)
       .withColumn("batch", col("batch").cast("long"))
   }

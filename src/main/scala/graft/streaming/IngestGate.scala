@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.{Bucketing, Dedup}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming ingest near-dup gate — the incremental MinHash probe
   * ([[graft.operators.Dedup.incrementalMinhashPairs]]) as an
@@ -77,7 +76,9 @@ object IngestGate {
     * Output layout under `outDir`:
     *  - `admitted/batch=<id>/`  — gated documents, full input schema
     *  - `quarantine/batch=<id>/` — (new_id, corpus_id, jaccard) pair
-    *    evidence for every rejected document
+    *    evidence for every document rejected as a near-duplicate of
+    *    the corpus. An in-batch near-duplicate of a smaller id is
+    *    dropped by the greedy rule and leaves no quarantine row
     *  - `sketch/batch=<id>/`   — admitted docs' (id, sh, sig), the
     *    index later batches probe (seeded from `seedSketch`);
     *    periodically folded into `batch=c<id>` (see compaction notes)
@@ -99,125 +100,84 @@ object IngestGate {
         "qualified name would abort the stream at the first compaction"))
     val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
     val sketchDir = s"$outDir/sketch"
     val sketchPath = new org.apache.hadoop.fs.Path(sketchDir)
-    if (reset) {
-      Seq(outDir, checkpointDir).foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        if (fs.exists(hp)) fs.delete(hp, true)
-      }
-      indexTable.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    }
-    val resuming = fs.exists(sketchPath)
-    if (!resuming) {
-      if (fs.exists(outPath) && fs.listStatus(outPath).nonEmpty)
-        throw new IllegalArgumentException(
-          s"outDir '$outDir' is non-empty and not prior gate state " +
-            "(no sketch/ index); pass reset = true to overwrite it")
-      // a stale checkpoint with a fresh outDir is the inverse hazard:
-      // the stream would mark every already-committed input file as
-      // done and silently skip it, leaving the rebuilt index missing
-      // those documents
-      val ckptPath = new org.apache.hadoop.fs.Path(checkpointDir)
-      val ckptFs = ckptPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (ckptFs.exists(ckptPath) && ckptFs.listStatus(ckptPath).nonEmpty)
-        throw new IllegalArgumentException(
-          s"checkpointDir '$checkpointDir' has streaming state but " +
-            s"outDir '$outDir' has no sketch index — a cold start here " +
-            "would skip every already-committed input file; pass " +
-            "reset = true to start clean")
-      seedSketch.write.parquet(s"$sketchDir/batch=seed")
-    }
     val admittedDir = s"$outDir/admitted"
     val quarantineDir = s"$outDir/quarantine"
-
-    val schema = spark.read
-      .option("pathGlobFilter", fileGlob).parquet(docsDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docsDir)
-
-    EventStreams.withStatefulShuffle(spark) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val docs = batch.persist()
-          val sketch = Dedup
-            .minhashSketch(docs, numHashes, shingleN, idCol, textCol)
-          // 1. in-batch dedup (greedy: larger id of any pair falls)
-          val inBatchPairs = Dedup
-            .minhashPairsFromSketch(sketch, threshold, numHashes, bands)
-          // localCheckpoint: the probe, the admit semi-join and the
-          // index append below all reuse the surviving sketch; the
-          // checkpoint materializes it ONCE (the operator releases
-          // its own cache before the later consumers run)
-          val batchSketch = sketch.join(
-            inBatchPairs.select(col("b_id").as("id")).distinct(),
-            Seq("id"), "left_anti").localCheckpoint()
-          // 2. probe the survivors against the accumulated index;
-          //    `batch` is a partition-discovery column, not sketch data
-          val corpus = spark.read.parquet(sketchDir).drop("batch")
-          val dupPairs = indexTable match {
-            case Some(t) if spark.catalog.tableExists(t) =>
-              // stored bucketed index covers the compacted batch=c*
-              // fold; the ≤ compactEvery recent batch dirs derive
-              // their band keys in-flight (each is batch-sized)
-              val stored = spark.table(t).select("id", "bandkey")
-              val recent = fs.listStatus(sketchPath)
-                .filter(_.isDirectory).map(_.getPath)
-                .filterNot(_.getName.startsWith("batch=c"))
-                .map(_.toString).toSeq
-              val recentIdx =
-                if (recent.isEmpty) stored.limit(0)
-                else Dedup.sketchBandIndex(
-                  spark.read.parquet(recent: _*), numHashes, bands)
-              Dedup.incrementalMinhashPairsIndexed(batchSketch, corpus,
-                stored.unionByName(recentIdx), threshold, numHashes, bands)
-            case _ =>
-              Dedup.incrementalMinhashPairs(
-                batchSketch, corpus, threshold, numHashes, bands)
-          }
-          // a crashed-then-replayed micro-batch probes an index that
-          // already contains its own docs (sketch/batch=<id> or a
-          // compacted fold of it): a doc is never a duplicate of its
-          // own id, so drop self-pairs or the whole replayed batch
-          // self-matches at jaccard 1.0 and is quarantined
-          dupPairs.filter(col("new_id") =!= col("corpus_id"))
-            .write.mode("overwrite")
-            .parquet(s"$quarantineDir/batch=$batchId")
-          // the two operators cache their (small) pair results for
-          // reuse; an always-on gate must drop them per batch or the
-          // executor cache grows by two tables every micro-batch
-          inBatchPairs.unpersist(false)
-          dupPairs.unpersist(false)
-          // 3. admit everything not quarantined; grow the index.
-          //    The quarantine parquet just written is re-read rather
-          //    than recomputed: the probe pipeline ran once.
-          val rejected = spark.read
-            .parquet(s"$quarantineDir/batch=$batchId")
-            .select(col("new_id").as("id")).distinct()
-          val keptIds = batchSketch.select("id")
-            .join(rejected, Seq("id"), "left_anti")
-          docs.join(keptIds, docs(idCol) === keptIds("id"), "left_semi")
-            .write.mode("overwrite").parquet(s"$admittedDir/batch=$batchId")
-          batchSketch
-            .join(rejected, Seq("id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$sketchDir/batch=$batchId")
-          docs.unpersist()
-          // 4. periodic compaction: bound sketch dir growth and keep
-          //    the stored candidate index covering the whole corpus
-          if (compactEvery > 0 &&
-              fs.listStatus(sketchPath).count(_.isDirectory) >= compactEvery)
-            compactSketchIndex(spark, outDir, batchId,
-              numHashes, bands, indexTable, indexBuckets)
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    if (reset) indexTable.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    FileGate.run(spark, docsDir, outDir, checkpointDir, fileGlob, reset,
+        marker = "sketch/",
+        coldStart = seedSketch.write.parquet(s"$sketchDir/batch=seed")
+    ) { (batch, batchId) =>
+      val docs = batch.persist()
+      val sketch = Dedup
+        .minhashSketch(docs, numHashes, shingleN, idCol, textCol)
+      // 1. in-batch dedup (greedy: larger id of any pair falls)
+      val inBatchPairs = Dedup
+        .minhashPairsFromSketch(sketch, threshold, numHashes, bands)
+      // localCheckpoint: the probe, the admit semi-join and the
+      // index append below all reuse the surviving sketch; the
+      // checkpoint materializes it ONCE (the operator releases
+      // its own cache before the later consumers run)
+      val batchSketch = sketch.join(
+        inBatchPairs.select(col("b_id").as("id")).distinct(),
+        Seq("id"), "left_anti").localCheckpoint()
+      // 2. probe the survivors against the accumulated index;
+      //    `batch` is a partition-discovery column, not sketch data
+      val corpus = spark.read.parquet(sketchDir).drop("batch")
+      val dupPairs = indexTable match {
+        case Some(t) if spark.catalog.tableExists(t) =>
+          // stored bucketed index covers the compacted batch=c*
+          // fold; the ≤ compactEvery recent batch dirs derive
+          // their band keys in-flight (each is batch-sized)
+          val stored = spark.table(t).select("id", "bandkey")
+          val recent = fs.listStatus(sketchPath)
+            .filter(_.isDirectory).map(_.getPath)
+            .filterNot(_.getName.startsWith("batch=c"))
+            .map(_.toString).toSeq
+          val recentIdx =
+            if (recent.isEmpty) stored.limit(0)
+            else Dedup.sketchBandIndex(
+              spark.read.parquet(recent: _*), numHashes, bands)
+          Dedup.incrementalMinhashPairsIndexed(batchSketch, corpus,
+            stored.unionByName(recentIdx), threshold, numHashes, bands)
+        case _ =>
+          Dedup.incrementalMinhashPairs(
+            batchSketch, corpus, threshold, numHashes, bands)
+      }
+      // a crashed-then-replayed micro-batch probes an index that
+      // already contains its own docs (sketch/batch=<id> or a
+      // compacted fold of it): a doc is never a duplicate of its
+      // own id, so drop self-pairs or the whole replayed batch
+      // self-matches at jaccard 1.0 and is quarantined
+      dupPairs.filter(col("new_id") =!= col("corpus_id"))
+        .write.mode("overwrite")
+        .parquet(s"$quarantineDir/batch=$batchId")
+      // the two operators cache their (small) pair results for
+      // reuse; an always-on gate must drop them per batch or the
+      // executor cache grows by two tables every micro-batch
+      inBatchPairs.unpersist(false)
+      dupPairs.unpersist(false)
+      // 3. admit everything not quarantined; grow the index.
+      //    The quarantine parquet just written is re-read rather
+      //    than recomputed: the probe pipeline ran once.
+      val rejected = spark.read
+        .parquet(s"$quarantineDir/batch=$batchId")
+        .select(col("new_id").as("id")).distinct()
+      val keptIds = batchSketch.select("id")
+        .join(rejected, Seq("id"), "left_anti")
+      docs.join(keptIds, docs(idCol) === keptIds("id"), "left_semi")
+        .write.mode("overwrite").parquet(s"$admittedDir/batch=$batchId")
+      batchSketch
+        .join(rejected, Seq("id"), "left_anti")
+        .write.mode("overwrite").parquet(s"$sketchDir/batch=$batchId")
+      docs.unpersist()
+      // 4. periodic compaction: bound sketch dir growth and keep
+      //    the stored candidate index covering the whole corpus
+      if (compactEvery > 0 &&
+          fs.listStatus(sketchPath).count(_.isDirectory) >= compactEvery)
+        compactSketchIndex(spark, outDir, batchId,
+          numHashes, bands, indexTable, indexBuckets)
     }
     (spark.read.parquet(admittedDir).drop("batch"),
       spark.read.parquet(quarantineDir).drop("batch"))

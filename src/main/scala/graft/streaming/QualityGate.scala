@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Corpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming QUALITY gate — the per-document quality battery
   * (model-based language ID + Gopher rules + classifier odds) as an
@@ -21,7 +20,7 @@ import org.apache.spark.sql.streaming.Trigger
   * [[Corpus.loadQualityModel]] — the train-once / stream-forever
   * split every model family uses).
   *
-  * foreachBatch (the [[IngestGate]] harness pattern) rather than a
+  * foreachBatch (the [[FileGate]] skeleton) rather than a
   * plain append sink because each micro-batch fans out to THREE
   * exactly-once outputs — the full verdict table, the admitted
   * documents, and the rejected evidence — each written under a
@@ -116,67 +115,28 @@ object QualityGate {
                   minTokens: Long = 30,
                   fileGlob: String = "*.parquet",
                   reset: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
-    val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
     val verdictDir = s"$outDir/verdict"
-    if (reset) {
-      Seq(outDir, checkpointDir).foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        if (fs.exists(hp)) fs.delete(hp, true)
-      }
-    }
-    val resuming = fs.exists(new org.apache.hadoop.fs.Path(verdictDir))
-    if (!resuming) {
-      if (fs.exists(outPath) && fs.listStatus(outPath).nonEmpty)
-        throw new IllegalArgumentException(
-          s"outDir '$outDir' is non-empty and not prior gate state " +
-            "(no verdict/ table); pass reset = true to overwrite it")
-      val ckptPath = new org.apache.hadoop.fs.Path(checkpointDir)
-      val ckptFs = ckptPath.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      if (ckptFs.exists(ckptPath) && ckptFs.listStatus(ckptPath).nonEmpty)
-        throw new IllegalArgumentException(
-          s"checkpointDir '$checkpointDir' has streaming state but " +
-            s"outDir '$outDir' has no verdict table — a cold start " +
-            "here would skip every already-committed input file; " +
-            "pass reset = true to start clean")
-    }
-    val schema = spark.read
-      .option("pathGlobFilter", fileGlob).parquet(docsDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", fileGlob)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(docsDir)
-
-    EventStreams.withStatefulShuffle(spark) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val docs = batch.persist()
-          val verdict = gateVerdict(docs, langModel, qualityModel,
-            idCol, textCol, minTokens)
-          verdict.write.mode("overwrite")
-            .parquet(s"$verdictDir/batch=$batchId")
-          // re-read the committed verdict rather than recompute: the
-          // gate pipeline (classifier probe included) ran once
-          val v = spark.read.parquet(s"$verdictDir/batch=$batchId")
-          docs.join(
-              v.filter(col("keep"))
-                .select(col("doc_id").as("__kid"), col("lang_pred")),
-              docs(idCol) === col("__kid"))
-            .drop("__kid")
-            .write.mode("overwrite")
-            .parquet(s"$outDir/admitted/batch=$batchId")
-          v.filter(!col("keep"))
-            .write.mode("overwrite")
-            .parquet(s"$outDir/rejected/batch=$batchId")
-          docs.unpersist()
-          ()
-        }
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    FileGate.run(spark, docsDir, outDir, checkpointDir, fileGlob, reset,
+        marker = "verdict/") { (batch, batchId) =>
+      val docs = batch.persist()
+      val verdict = gateVerdict(docs, langModel, qualityModel,
+        idCol, textCol, minTokens)
+      verdict.write.mode("overwrite")
+        .parquet(s"$verdictDir/batch=$batchId")
+      // re-read the committed verdict rather than recompute: the
+      // gate pipeline (classifier probe included) ran once
+      val v = spark.read.parquet(s"$verdictDir/batch=$batchId")
+      docs.join(
+          v.filter(col("keep"))
+            .select(col("doc_id").as("__kid"), col("lang_pred")),
+          docs(idCol) === col("__kid"))
+        .drop("__kid")
+        .write.mode("overwrite")
+        .parquet(s"$outDir/admitted/batch=$batchId")
+      v.filter(!col("keep"))
+        .write.mode("overwrite")
+        .parquet(s"$outDir/rejected/batch=$batchId")
+      docs.unpersist()
     }
     (spark.read.parquet(verdictDir).drop("batch"),
       spark.read.parquet(s"$outDir/admitted").drop("batch"),

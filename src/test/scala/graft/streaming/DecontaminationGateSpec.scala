@@ -99,4 +99,31 @@ class DecontaminationGateSpec extends SparkSpec {
         bench, b => sk(b), s"$tmp/gate", s"$tmp/ckpt", 0.9))
     assert(e.getMessage.contains("not prior gate state"), e.getMessage)
   }
+
+  test("cold-start guards: stale checkpoint with a fresh outDir fails " +
+      "fast; reset = true over prior state starts clean") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_dg_sc").toString
+    val docsDir = s"$tmp/docs"
+    new java.io.File(docsDir).mkdirs()
+    writeOneFile(Seq((1L, evalText), (2L, "clean words about query " +
+        "planners and shuffle exchanges")).toDF("doc_id", "text"),
+      s"$docsDir/a.parquet", System.currentTimeMillis() - 60000)
+    val bench = sk(Seq((100L, evalText)).toDF("doc_id", "text"))
+    def gate(reset: Boolean) = DecontaminationGate.decontaminationGate(
+      spark, docsDir, bench, b => sk(b), s"$tmp/gate", s"$tmp/ckpt",
+      threshold = 0.9, numHashes = 32, bands = 16, reset = reset)
+    gate(reset = false)
+    // outDir wiped, checkpoint kept: a cold start would mark a.parquet
+    // committed and gate nothing
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$tmp/gate"))
+    val e = intercept[IllegalArgumentException](gate(reset = false))
+    assert(e.getMessage.contains("streaming state"), e.getMessage)
+    // reset clears the stale checkpoint and re-gates every file
+    val (verdict, admitted, quarantine) = gate(reset = true)
+    assert(verdict.select("id").as[Long].collect().sorted.toSeq
+      == Seq(1L, 2L))
+    assert(admitted.select("doc_id").as[Long].collect().toSeq == Seq(2L))
+    assert(quarantine.select("id").as[Long].collect().toSeq == Seq(1L))
+  }
 }
