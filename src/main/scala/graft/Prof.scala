@@ -924,8 +924,8 @@ object Prof {
           t3.withColumn("n_tokens",
             TextFunctions.tokenCount(col("text")).cast("long"))
             .localCheckpoint(true))
-        time(s"r$r.packByRange")(
-          Sampling.packSequencesByRange(ckpt, "n_tokens", "doc_id",
+        time(s"r$r.pack")(
+          Sampling.packSequences(ckpt, "n_tokens", "doc_id",
             budget = 512L)
             .write.mode("overwrite").format("noop").save())
         spark.catalog.clearCache()

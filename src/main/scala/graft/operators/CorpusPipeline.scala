@@ -30,7 +30,7 @@ object CorpusPipeline {
     *                       contaminated
     * @param splitWeights   name → weight for the deterministic split
     *                       (empty = skip)
-    * @param packBudget     token budget per packed bin (None = skip)
+    * @param packBudget     token budget per packed bin, >= 1 (None = skip)
     */
   case class Config(scrubPii: Boolean = true,
                     minQuality: Double = 0.0,
@@ -72,16 +72,15 @@ object CorpusPipeline {
     if (config.splitWeights.nonEmpty)
       t = Sampling.deterministicSplit(t, idCol, config.splitWeights)
 
-    // 5. context-window packing on the token count — the range form
-    //    (bit-identical bins, no global single-reducer sort) so the
-    //    facade's plan is the one that survives 100 TB.
+    // 5. context-window packing on the token count (range-bucketed
+    //    running sum, no global single-reducer sort).
     //    PrefixSum scans its input THREE times (quantile probe,
     //    bucket totals, final plan) — rebase the survivors on
     //    materialized partitions first (r17; the crawlPrepareScored
     //    discipline), or each scan replays the whole
     //    dedup-CC + decontaminate chain above
     config.packBudget.foreach { budget =>
-      t = Sampling.packSequencesByRange(
+      t = Sampling.packSequences(
         t.withColumn("n_tokens",
           TextFunctions.tokenCount(col(textCol)).cast("long"))
           .localCheckpoint(true),
@@ -247,17 +246,15 @@ object CorpusPipeline {
     * joins); the kept corpus is PERSISTED once (it feeds langid +
     * both LM passes + the group-size scan — without the persist each
     * would replay the whole crawl chain) and released when the
-    * result materializes. `boundaryForm=true` (default) buckets via
+    * result materializes. Buckets come from
     * [[Corpus.perplexityBucketsByBoundary]] — exact per-language
     * tercile boundary scores through batched order statistics, no
-    * per-language sort task; `false` keeps the exact ntile window
-    * (the oracle-equality baseline). Output: (doc_id, lang_pred,
-    * n_tokens, avg_tok_p, bucket) for every kept doc. */
+    * per-language sort task. Output: (doc_id, lang_pred, n_tokens,
+    * avg_tok_p, bucket) for every kept doc. */
   def crawlPrepareScored(docs: DataFrame, blocklist: DataFrame,
                          urlCol: String = "url", idCol: String = "doc_id",
                          htmlCol: String = "html",
                          lineMinDf: Long = 2, minTokens: Long = 20,
-                         boundaryForm: Boolean = true,
                          modelLangId: Boolean = false): DataFrame = {
     val gated = blocklistFilter(docs, blocklist, urlCol)
       .filter(col("keep"))
@@ -304,11 +301,8 @@ object CorpusPipeline {
           .drop("__model", "__marker")
           .localCheckpoint(true) // the narrowing tail is many actions
       }
-    if (boundaryForm)
-      Corpus.perplexityBucketsByBoundary(kept, "lang_pred", "doc_id",
-        "__text")
-    else
-      Corpus.perplexityBuckets(kept, "lang_pred", "doc_id", "__text")
+    Corpus.perplexityBucketsByBoundary(kept, "lang_pred", "doc_id",
+      "__text")
   }
 
   /** LANDING ZONE to gated corpus, one call — the production loop a
@@ -414,8 +408,8 @@ object CorpusPipeline {
     * Scale shape: encode + id mapping are scan-stage column
     * expressions (the vocab trie compiles once per executor; the
     * id map is a broadcast literal) — zero exchanges until packing.
-    * Packing is [[Sampling.packSequencesByRange]] (PrefixSum range
-    * buckets — no global sort task). The only remaining window is
+    * Packing is [[Sampling.packSequences]] (PrefixSum range buckets
+    * — no global sort task). The only remaining window is
     * the per-bin offset sum, and a bin holds at most `budget`
     * documents (every kept doc has >= 1 token), so no window task
     * ever sees more than `budget` rows regardless of corpus size.
@@ -450,7 +444,7 @@ object CorpusPipeline {
           " ").as("token_ids"))
       .localCheckpoint(true)
     val binned =
-      Sampling.packSequencesByRange(enc, "n_tokens", idCol, budget, nBuckets)
+      Sampling.packSequences(enc, "n_tokens", idCol, budget, nBuckets)
     val wBin = org.apache.spark.sql.expressions.Window
       .partitionBy(col("bin_id"))
       .orderBy(col("n_tokens").desc, col(idCol).asc)

@@ -387,8 +387,8 @@ object OrderStats {
     * under that order, bit-identical to `row_number().over(
     * Window.partitionBy(group).orderBy(weight desc, id asc)) <= n`.
     * The window form sorts ONE GROUP PER TASK — the per-group hot
-    * ceiling every `_range`/selectTopN twin in this file exists to
-    * remove; here every group's boundary resolves through ONE
+    * ceiling every narrowing form in this file exists to remove;
+    * here every group's boundary resolves through ONE
     * batched [[kthLargestByGroup]] narrowing (job count
     * O(narrowing rounds) total, not O(groups)), the counts above
     * each boundary come from one grouped aggregation, and only the
@@ -471,8 +471,8 @@ object OrderStats {
     * aggregate (ONE group's values buffered in one task) this holds
     * O(k·log(n/k)) state per group at ANY group size, with map-side
     * combine, and unlike [[quantilesByGroup]]'s exact narrowing it is
-    * ONE aggregation job, not O(rounds) — the constant that made the
-    * `_range` twins toy-priced goes away entirely. The price is rank
+    * ONE aggregation job, not O(rounds) — the narrowing's per-round
+    * job constant goes away entirely. The price is rank
     * error (≤ ~1% of n at k = 200, spec-measured; EXACT while a
     * group's count stays under the level-0 capacity) and a discrete
     * (non-interpolating) quantile. Output: one row per group,
@@ -518,37 +518,25 @@ object OrderStats {
     * group: n, median, MAD (median absolute deviation), outlier
     * count (|v − med| > k·MAD, strict) and rate in exact ppm.
     *
-    * Three forms. The default and `scaleSafe = true` are
-    * bit-identical (spec-pinned), both quantile_cont-exact: the
-    * default runs Spark's exact Percentile aggregate twice (one
-    * shuffle per pass; buffers ONE group's values per task — the B7
-    * exact-form caveat, fine while every group fits a task, and now
-    * LOUD past `maxGroups` group keys via the guarded broadcast);
-    * `scaleSafe = true` swaps both medians onto
-    * [[quantilesByGroup]]'s batched kthLargestByGroup narrowing —
-    * no per-group buffering at any group size, at the documented
-    * `_range`-family toy constant (measured 8.8 s vs 1.5 s at
-    * sf0.1's 3 groups; the constant is narrowing rounds, not data).
-    * `sketched = true` is the 100 TB default: both medians come from
-    * the ONE-PASS mergeable KLL aggregate
-    * ([[sketchQuantilesByGroup]]) — no per-group buffering, no
+    * Two forms. The default is quantile_cont-exact: Spark's exact
+    * Percentile aggregate runs twice (one shuffle per pass; buffers
+    * ONE group's values per task — the B7 exact-form caveat, fine
+    * while every group fits a task, and LOUD past `maxGroups` group
+    * keys via the guarded broadcast). `sketched = true` is the
+    * 100 TB form: both medians come from the ONE-PASS mergeable KLL
+    * aggregate ([[sketchQuantilesByGroup]]) — no per-group buffering, no
     * narrowing rounds, no group-cardinality bound (the group frames
     * join WITHOUT a broadcast: at unbounded group counts AQE picks
     * the join side) — at the sketch's spec-pinned rank error.
     */
   def robustOutliersByGroup(df: DataFrame, groupCol: String,
                             valueCol: String, k: Double = 5.0,
-                            scaleSafe: Boolean = false,
                             sketched: Boolean = false,
                             sketchK: Int = 200,
                             maxGroups: Int = 100000): DataFrame = {
-    require(!(scaleSafe && sketched),
-      "pick ONE of scaleSafe (exact narrowing) or sketched (KLL)")
     val med =
       if (sketched) sketchQuantilesByGroup(df, groupCol, valueCol,
         Seq(("med", 0.5)), sketchK)
-      else if (scaleSafe) quantilesByGroup(df, groupCol, valueCol,
-        Seq(("med", 0.5)), maxGroups)
       else guardedBroadcastFrame(
         df.filter(col(valueCol).isNotNull).groupBy(col(groupCol))
           .agg(expr(s"percentile(CAST(`$valueCol` AS DOUBLE), 0.5)")
@@ -563,8 +551,6 @@ object OrderStats {
     val mad =
       if (sketched) sketchQuantilesByGroup(dev, groupCol, "__dev",
         Seq(("mad", 0.5)), sketchK)
-      else if (scaleSafe) quantilesByGroup(dev, groupCol, "__dev",
-        Seq(("mad", 0.5)), maxGroups)
       else guardedBroadcastFrame(
         dev.groupBy(col(groupCol))
           .agg(expr("percentile(__dev, 0.5)").as("mad")),
@@ -589,7 +575,7 @@ object OrderStats {
     * instead of vanishing). Default: exact Percentile bounds (one
     * grouped pass; the B7 exact-form caveat — buffers ONE group's
     * values per task, now LOUD past `maxGroups` group keys)
-    * broadcast back. `scaleSafe = true` is the 100 TB path: bounds
+    * broadcast back. `sketched = true` is the 100 TB path: bounds
     * from the ONE-PASS mergeable KLL sketch
     * ([[sketchQuantilesByGroup]]) — O(k·log n) state per group at
     * any group size, no narrowing rounds, no cardinality bound (the
@@ -601,13 +587,13 @@ object OrderStats {
   def winsorizeByGroup(df: DataFrame, groupCol: String,
                        valueCol: String, lo: Double = 0.05,
                        hi: Double = 0.95,
-                       scaleSafe: Boolean = false,
+                       sketched: Boolean = false,
                        sketchK: Int = 200,
                        maxGroups: Int = 100000): DataFrame = {
     require(lo >= 0 && hi <= 1 && lo < hi,
       s"need 0 <= lo < hi <= 1, got [$lo, $hi]")
     val bounds =
-      if (scaleSafe) sketchQuantilesByGroup(df, groupCol, valueCol,
+      if (sketched) sketchQuantilesByGroup(df, groupCol, valueCol,
         Seq(("__lo", lo), ("__hi", hi)), sketchK)
       else guardedBroadcastFrame(
         df.filter(col(valueCol).isNotNull)
@@ -620,7 +606,7 @@ object OrderStats {
           .select(col(groupCol), col("__b")(0).as("__lo"),
             col("__b")(1).as("__hi")),
         "winsorizeByGroup", maxGroups)
-    val boundsSide = if (scaleSafe) bounds else broadcast(bounds)
+    val boundsSide = if (sketched) bounds else broadcast(bounds)
     val v = col(valueCol).cast("double")
     df.join(boundsSide, Seq(groupCol))
       .withColumn(s"${valueCol}_w",

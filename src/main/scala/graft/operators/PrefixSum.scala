@@ -58,9 +58,11 @@ object PrefixSum {
                      valueCol: Column, out: String, nBuckets: Int = 64,
                      relErr: Double = 1e-3): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
+    // the offsets table's copies of the group keys (grouped path)
+    val pk = partCols.indices.map(i => s"__pk$i")
     val reserved = df.columns.toSet.intersect(Set(
       "__ck", "__bkt", "__loc", "__lcnt", "__btot", "__bcnt",
-      "__off", "__ocnt", out))
+      "__off", "__ocnt", "__obkt", out) ++ pk)
     require(reserved.isEmpty,
       s"withRunningSum reserves column name(s) ${reserved.mkString(", ")}")
 
@@ -136,16 +138,21 @@ object PrefixSum {
       } else {
         // grouped: exclusive prefix over the per-group totals — a
         // window PARTITIONED by the group over <= nBuckets rows per
-        // group, then a broadcast join back on (group, bucket)
+        // group, then a broadcast join back on (group, bucket). The
+        // group keys join null-safe: the window form treats a null
+        // key as one more group, so its rows must not fall out here
         val offW = Window.partitionBy(partCols.map(col): _*)
           .orderBy(col("__bkt"))
           .rowsBetween(Window.unboundedPreceding, -1)
         val offsets = totals
-          .withColumn("__off", sum(col("__btot")).over(offW))
-          .withColumn("__ocnt", coalesce(sum(col("__bcnt")).over(offW),
-            lit(0L)))
-          .drop("__btot", "__bcnt")
-        local.join(broadcast(offsets), partCols :+ "__bkt")
+          .select(partCols.zip(pk).map { case (c, k) => col(c).as(k) } ++
+            Seq(col("__bkt").as("__obkt"),
+              sum(col("__btot")).over(offW).as("__off"),
+              coalesce(sum(col("__bcnt")).over(offW), lit(0L)).as("__ocnt"))
+            : _*)
+        val on = partCols.zip(pk).map { case (c, k) => col(c) <=> col(k) }
+          .reduce(_ && _) && col("__bkt") === col("__obkt")
+        local.join(broadcast(offsets), on).drop(("__obkt" +: pk): _*)
       }
 
     joined

@@ -83,36 +83,23 @@ object Sampling {
     * fill bin 0 until the budget spills, then bin 1, and so on. A
     * doc longer than the budget gets its own bin (still one row).
     *
-    * The single global window is the VERIFIABLE form;
-    * [[packSequencesByRange]] is the same two columns computed per
-    * range-partition ([[PrefixSum]]) — bit-identical output, no
-    * single-reducer sort. */
+    * The running sum comes from [[PrefixSum.withRunningSum]]
+    * (quantile-bucketed ranges of the (length desc) order, per-bucket
+    * local windows, offset add) — the bins of the single global
+    * window, and no task ever sorts more than ~1/nBuckets of the
+    * corpus. The sort proxy is the negated length (monotone in the
+    * descending order); id ties spread across at most one boundary
+    * bucket. */
   def packSequences(df: DataFrame, lenCol: String, idCol: String,
-                    budget: Long): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col(lenCol).desc, col(idCol).asc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    df.withColumn("__running", sum(col(lenCol)).over(w))
-      .withColumn("bin_id",
-        floor((col("__running") - col(lenCol)) / budget).cast("long"))
-      .drop("__running")
-  }
-
-  /** [[packSequences]] at 100 TB: the running token sum comes from
-    * [[PrefixSum.withRunningSum]] (quantile-bucketed ranges of the
-    * (length desc) order, per-bucket local windows, offset add) —
-    * bit-identical bins, and no task ever sorts more than ~1/nBuckets
-    * of the corpus. The sort proxy is the negated length (monotone in
-    * the descending order); id ties spread across at most one
-    * boundary bucket. */
-  def packSequencesByRange(df: DataFrame, lenCol: String, idCol: String,
-                           budget: Long, nBuckets: Int = 64): DataFrame =
+                    budget: Long, nBuckets: Int = 64): DataFrame = {
+    require(budget >= 1, s"budget must be >= 1, got $budget")
     PrefixSum.withRunningSum(df, Seq.empty,
         Seq(col(lenCol).desc, col(idCol).asc),
         -col(lenCol).cast("double"), col(lenCol), "__running", nBuckets)
       .withColumn("bin_id",
         floor((col("__running") - col(lenCol)) / budget).cast("long"))
       .drop("__running")
+  }
 
   /** Temperature-weighted corpus mixing (the multi-source sampling
     * rule behind multilingual / multi-domain training mixes):
@@ -213,41 +200,17 @@ object Sampling {
     * the running token total BEFORE it is < budget, so selection is
     * a prefix of the deterministic hash order: stable across runs,
     * engines, and retries, and each group keeps at least one
-    * document when its budget is > 0. One window shuffle per the
-    * group key; the running sum is the only sequential state —
-    * range-partitionable at scale exactly like packSequences.
+    * document when its budget is > 0.
     *
-    * Per-group bound: the window sorts ONE GROUP per task, so the
-    * largest source is the hot-task ceiling. Training mixes have
-    * dozens-to-hundreds of sources; if one source ever approaches
-    * single-task scale, split its running sum with the
-    * range-partition + per-partition-offset form ([[OrderStats]]'s
-    * de-windowing pattern). */
+    * The per-source running sum comes from
+    * [[PrefixSum.withRunningSum]], so a source at single-task scale
+    * is range-split into nBuckets local windows instead of one hot
+    * sort. The sort proxy is the md5-hex prefix
+    * ([[PrefixSum.md5PrefixKey]]), uniform within every group by
+    * construction. */
   def tokenBudgetSample(df: DataFrame, groupCol: String, idCol: String,
-                        nTokensCol: String, budget: Long): DataFrame = {
-    require(budget >= 1, s"budget must be >= 1, got $budget")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(groupCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.withColumn("__cum_before",
-        coalesce(sum(col(nTokensCol))
-          .over(w.rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .filter(col("__cum_before") < budget)
-      .drop("__cum_before")
-  }
-
-  /** [[tokenBudgetSample]] with the per-source running sum computed
-    * by [[PrefixSum.withRunningSum]] — bit-identical keep set, and a
-    * source at single-task scale is range-split into nBuckets local
-    * windows instead of one hot sort. The sort proxy is the md5-hex
-    * prefix ([[PrefixSum.md5PrefixKey]]), uniform within every group
-    * by construction. */
-  def tokenBudgetSampleByRange(df: DataFrame, groupCol: String,
-                               idCol: String, nTokensCol: String,
-                               budget: Long, nBuckets: Int = 64)
-  : DataFrame = {
+                        nTokensCol: String, budget: Long,
+                        nBuckets: Int = 64): DataFrame = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
     PrefixSum.withRunningSum(df, Seq(groupCol),
         Seq(md5(col(idCol).cast("string")), col(idCol)),
@@ -348,34 +311,13 @@ object Sampling {
     * Plan shape: one map-side-combined count per stratum; the
     * allocation runs as windows over the STRATA table (|strata| rows
     * — a single-reducer global window over a table that is tiny by
-    * construction); the allocation broadcasts back onto the corpus;
-    * one per-stratum window takes the hash-order prefix. The corpus
-    * shuffles once, on the stratum key. Per-group bound: the prefix
-    * window sorts one stratum per task — the dominant stratum is the
-    * hot-task ceiling; at single-task scale switch the prefix to the
-    * [[OrderStats]] cutoff pattern (alloc_g-th smallest hash as a
-    * per-stratum boundary). */
+    * construction) and broadcasts back onto the corpus. The
+    * per-stratum hash-order prefix rank is a running count of 1s
+    * from [[PrefixSum.withRunningSum]] (= row_number), so the
+    * dominant stratum is range-split into nBuckets local windows
+    * instead of one hot sort. */
   def stratifiedSample(df: DataFrame, stratumCol: String, idCol: String,
-                       totalN: Long): DataFrame = {
-    val alloc = hamiltonAlloc(df, stratumCol, totalN)
-    val prefixW = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(stratumCol))
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    df.join(broadcast(alloc), col(stratumCol) <=> col("__g"))
-      .withColumn("__rk", row_number().over(prefixW))
-      .filter(col("__rk") <= col("__alloc"))
-      .drop("__g", "__alloc", "__rk")
-  }
-
-  /** [[stratifiedSample]] with the per-stratum hash-order prefix rank
-    * computed by [[PrefixSum.withRunningSum]] (running count of 1s =
-    * row_number) — bit-identical keep set, and the dominant stratum is
-    * range-split into nBuckets local windows instead of one hot sort.
-    * The allocation windows still run over the STRATA counts table
-    * (|strata| rows — tiny by construction). */
-  def stratifiedSampleByRange(df: DataFrame, stratumCol: String,
-                              idCol: String, totalN: Long,
-                              nBuckets: Int = 64): DataFrame = {
+                       totalN: Long, nBuckets: Int = 64): DataFrame = {
     val alloc = hamiltonAlloc(df, stratumCol, totalN)
     PrefixSum.withRunningSum(df, Seq(stratumCol),
         Seq(md5(col(idCol).cast("string")), col(idCol)),
@@ -386,8 +328,7 @@ object Sampling {
   }
 
   /** Largest-remainder (Hamilton) apportionment of totalN seats over
-    * the strata of `stratumCol`, as a (__g, __alloc) table — the
-    * shared allocation leg of both stratified-sample variants. */
+    * the strata of `stratumCol`, as a (__g, __alloc) table. */
   private def hamiltonAlloc(df: DataFrame, stratumCol: String,
                             totalN: Long): DataFrame = {
     require(totalN >= 0, s"totalN must be >= 0, got $totalN")

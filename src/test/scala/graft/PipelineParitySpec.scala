@@ -154,10 +154,14 @@ class PipelineParitySpec extends SparkSpec {
       (i, ("the " * (i % 7 + 1).toInt).trim)).toDF("doc_id", "text")
     val out = CorpusPipeline.tokenizePack(docs, vocab, budget = 16L,
       nBuckets = 4)
-    val exact = Sampling.packSequences(
-      out.select("doc_id", "n_tokens"), "n_tokens", "doc_id", budget = 16L)
-    val mismatch = out.select("doc_id", "bin_id")
-      .except(exact.select("doc_id", "bin_id"))
+    // the definition: one global (n_tokens desc, id) running sum
+    val w = org.apache.spark.sql.expressions.Window
+      .orderBy(col("n_tokens").desc, col("doc_id").asc)
+    val exact = out.select(col("doc_id"),
+      floor((sum(col("n_tokens")).over(w.rowsBetween(
+        org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)) -
+        col("n_tokens")) / 16L).cast("long").as("bin_id"))
+    val mismatch = out.select("doc_id", "bin_id").except(exact)
     assert(mismatch.isEmpty,
       s"range bins drifted from the exact definition: ${
         mismatch.collect().mkString(",")}")

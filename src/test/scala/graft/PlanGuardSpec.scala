@@ -466,8 +466,8 @@ class PlanGuardSpec extends SparkSpec {
 
   test("range prefix-sum queries: no corpus-wide or per-group-hot window") {
     // the r13 fold-in of the remaining running-sum windows: the
-    // *_range sampling variants must never sort a whole group (or the
-    // whole corpus) in one window task. Every WindowExec over corpus
+    // sampling queries (and their *_range aliases) must never sort a
+    // whole group (or the whole corpus) in one window task. Every WindowExec over corpus
     // rows must include the __bkt range key in its partitionSpec; the
     // only windows WITHOUT it are (a) the per-group offsets window
     // over the <= nBuckets-rows-per-group totals table and (b) the
@@ -486,8 +486,9 @@ class PlanGuardSpec extends SparkSpec {
       }
       p +: children.flatMap(walk)
     }
-    for (q <- Seq("q_pack_sequences_range", "q_token_budget_mix_range",
-        "q_stratified_sample_range")) {
+    for (q <- Seq("q_pack_sequences", "q_token_budget_mix",
+        "q_stratified_sample", "q_pack_sequences_range",
+        "q_token_budget_mix_range", "q_stratified_sample_range")) {
       val df = SparkEntry.queries(q)(spark, sf)
       df.collect() // finalize adaptive stages
       val windows = walk(df.queryExecution.executedPlan)
@@ -508,7 +509,7 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("q_tokenize_pack: every window range-bucketed or bin-scoped") {
-    // the last-mile facade must inherit packSequencesByRange's scale
+    // the last-mile facade must inherit packSequences' scale
     // shape: the running sum runs per __bkt range bucket (plus the
     // bounded offsets window), and the only new window is the per-bin
     // offset sum — a bin holds at most `budget` docs by construction

@@ -103,14 +103,14 @@ class KllQuantilesSpec extends SparkSpec {
     assert(out("b").isEmpty)
   }
 
-  test("winsorizeByGroup(scaleSafe): clamps to sketch bounds, " +
+  test("winsorizeByGroup(sketched): clamps to sketch bounds, " +
     "bounds within 1% rank error of exact") {
     val rnd = new scala.util.Random(7)
     val n = 20000
     val df = (1 to n).map(i => ("g", rnd.nextDouble() * 100)).toDF("g", "v")
       .repartition(16)
     val out = OrderStats.winsorizeByGroup(df, "g", "v",
-      lo = 0.05, hi = 0.95, scaleSafe = true)
+      lo = 0.05, hi = 0.95, sketched = true)
     val rows = out.collect()
     assert(rows.length == n)
     val wmin = rows.map(_.getAs[Double]("v_w")).min
@@ -198,6 +198,6 @@ class KllQuantilesSpec extends SparkSpec {
     assert(OrderStats.robustOutliersByGroup(df, "g", "v",
       sketched = true).count() == 50L)
     assert(OrderStats.winsorizeByGroup(df, "g", "v",
-      scaleSafe = true).count() == 50L)
+      sketched = true).count() == 50L)
   }
 }

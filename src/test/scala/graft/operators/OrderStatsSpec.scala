@@ -268,17 +268,6 @@ class OrderStatsSpec extends SparkSpec {
     assert(row == ((100L, 1L)))
   }
 
-  test("robustOutliersByGroup: scaleSafe form is bit-identical") {
-    val df = Seq(("a", 1.5), ("a", 2.25), ("a", 7.125), ("a", -3.0),
-      ("b", 0.5), ("b", 0.5), ("b", 99.0), ("c", 42.0))
-      .toDF("g", "v")
-    val exact = OrderStats.robustOutliersByGroup(df, "g", "v", k = 2.0)
-      .orderBy("g").collect().toSeq
-    val scale = OrderStats.robustOutliersByGroup(df, "g", "v", k = 2.0,
-      scaleSafe = true).orderBy("g").collect().toSeq
-    assert(exact == scale)
-  }
-
   test("winsorizeByGroup clamps to the exact band and flags clips") {
     val df = Seq(("g", 1L, 0.0), ("g", 2L, 10.0), ("g", 3L, 20.0),
       ("g", 4L, 30.0), ("g", 5L, 1000.0)).toDF("grp", "id", "v")

@@ -87,53 +87,81 @@ class PrefixSumSpec extends SparkSpec {
     assert(rows.forall { case (_, k) => k >= 0 && k < (1L << 48) })
   }
 
-  test("packSequencesByRange == packSequences (incl. tied lengths)") {
+  // hash-order prefix windows: the per-group (md5 hex of id, id)
+  // order the token-budget and stratified samplers select by
+  private def hashOrder(group: String) =
+    Window.partitionBy(col(group))
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+
+  test("packSequences == the global-window bins (incl. tied lengths)") {
     val rnd = new scala.util.Random(11)
     val df = (1L to 400L).map(i => (i, 1L + rnd.nextInt(8).toLong))
       .toDF("doc_id", "n_tokens")
-    val expect = Sampling.packSequences(df, "n_tokens", "doc_id", 16L)
-      .select("doc_id", "n_tokens", "bin_id")
+    val w = Window.orderBy(col("n_tokens").desc, col("doc_id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val expect = df
+      .withColumn("bin_id", floor((sum(col("n_tokens")).over(w) -
+        col("n_tokens")) / 16L).cast("long"))
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     for (nb <- Seq(1, 5, 64)) {
       val got = Sampling
-        .packSequencesByRange(df, "n_tokens", "doc_id", 16L, nb)
+        .packSequences(df, "n_tokens", "doc_id", 16L, nb)
         .select("doc_id", "n_tokens", "bin_id")
         .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-      assert(got == expect, s"nBuckets=$nb diverged from packSequences")
+      assert(got == expect, s"nBuckets=$nb diverged from the window bins")
     }
   }
 
-  test("tokenBudgetSampleByRange == tokenBudgetSample") {
+  test("tokenBudgetSample == the per-group window keep set") {
     val rnd = new scala.util.Random(13)
     val df = (1L to 600L).map { i =>
       (i, s"src${rnd.nextInt(4)}", 1L + rnd.nextInt(30).toLong)
     }.toDF("doc_id", "source", "n_tokens")
-    val expect = Sampling
-      .tokenBudgetSample(df, "source", "doc_id", "n_tokens", 300L)
+    val before = hashOrder("source")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val expect = df
+      .withColumn("cum", coalesce(sum(col("n_tokens")).over(before), lit(0L)))
+      .filter(col("cum") < 300L)
       .select("doc_id").as[Long].collect().sorted.toSeq
     for (nb <- Seq(1, 4, 64)) {
       val got = Sampling
-        .tokenBudgetSampleByRange(df, "source", "doc_id", "n_tokens",
-          300L, nb)
+        .tokenBudgetSample(df, "source", "doc_id", "n_tokens", 300L, nb)
         .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(got == expect, s"nBuckets=$nb diverged from tokenBudgetSample")
+      assert(got == expect, s"nBuckets=$nb diverged from the window keep set")
     }
   }
 
-  test("stratifiedSampleByRange == stratifiedSample (exact output size)") {
+  test("stratifiedSample == the per-stratum window prefix (exact size)") {
     val rnd = new scala.util.Random(17)
     val df = (1L to 700L).map { i =>
       (i, s"lang${rnd.nextInt(5)}")
     }.toDF("doc_id", "lang")
-    val expect = Sampling.stratifiedSample(df, "lang", "doc_id", 90L)
-      .select("doc_id").as[Long].collect().sorted.toSeq
+    // local largest-remainder allocation, then each stratum's first
+    // alloc_g rows under the window's hash order
+    val n = df.groupBy("lang").count().as[(String, Long)].collect().toMap
+    val base = n.map { case (g, c) => g -> 90L * c / 700L }
+    val seats = n.toSeq.sortBy { case (g, c) => (-(90L * c % 700L), g) }
+      .take((90L - base.values.sum).toInt).map(_._1).toSet
+    val alloc = base.map { case (g, b) => g -> (if (seats(g)) b + 1 else b) }
+    val expect = df.withColumn("rk", row_number().over(hashOrder("lang")))
+      .as[(Long, String, Int)].collect()
+      .collect { case (id, g, rk) if rk <= alloc(g) => id }.sorted.toSeq
     assert(expect.size == 90)
     for (nb <- Seq(1, 6, 64)) {
-      val got = Sampling
-        .stratifiedSampleByRange(df, "lang", "doc_id", 90L, nb)
+      val got = Sampling.stratifiedSample(df, "lang", "doc_id", 90L, nb)
         .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(got == expect, s"nBuckets=$nb diverged from stratifiedSample")
+      assert(got == expect, s"nBuckets=$nb diverged from the window prefix")
     }
+  }
+
+  test("a null group key stays one group, as in the window form") {
+    val df = Seq((1L, Option("a"), 0L, 5L), (2L, None, 1L, 7L),
+      (3L, None, 2L, 1L), (4L, Option("a"), 3L, 2L), (5L, None, 4L, 4L))
+      .toDF("id", "g", "ck", "v")
+    val expect = sortedRows(windowSum(df, Seq("g")))
+    for (nb <- Seq(1, 2, 8))
+      assert(sortedRows(rangeSum(df, Seq("g"), nb)) == expect,
+        s"nBuckets=$nb dropped or split the null group")
   }
 
   test("reserved-name collision fails loudly") {

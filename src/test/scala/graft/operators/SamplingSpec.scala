@@ -62,6 +62,17 @@ class SamplingSpec extends SparkSpec {
     }
   }
 
+  test("packSequences rejects a budget below 1") {
+    // 0 would fail mid-job on the bin division, and a negative
+    // budget would give negative bin ids
+    val df = Seq((1L, 3L), (2L, 5L)).toDF("id", "n")
+    for (budget <- Seq(0L, -5L)) {
+      val e = intercept[IllegalArgumentException](
+        Sampling.packSequences(df, "n", "id", budget))
+      assert(e.getMessage.contains(s"got $budget"))
+    }
+  }
+
   test("temperatureSample: min group kept whole, big groups sqrt-damped") {
     val df = ((1 to 1600).map(i => (i.toLong, "big")) ++
       (2001 to 2100).map(i => (i.toLong, "small")))
