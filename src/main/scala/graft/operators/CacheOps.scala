@@ -12,6 +12,14 @@ import org.apache.spark.storage.StorageLevel
   */
 private[graft] object CacheOps {
 
+  /** Persist and count `result`, then unpersist `intermediates`.
+    *
+    * The caller owns the returned frame: it is cached, and stays
+    * cached until the caller calls `unpersist()` on it. An operator
+    * that returns it hands that ownership on to its own caller, so
+    * its scaladoc must say the result is cached. Nothing frees it
+    * otherwise; a long-lived session keeps one cached table per call.
+    */
   def materializeAndRelease(result: DataFrame,
                             intermediates: DataFrame*): DataFrame = {
     val out = result.persist(StorageLevel.MEMORY_AND_DISK)

@@ -89,32 +89,25 @@ object RangeJoin {
     * by the k-capped BoundedTopK aggregate, so ranking shuffles at
     * most k rows per point regardless of local density. The
     * nearest-residue lookup pattern (structures.py:382 cKDTree query)
-    * at linear cost. Output: pk, id, rank, neighbor_id, dist2. */
+    * at linear cost. A lazy plan: building it runs no job and
+    * persists nothing. Output: pk, id, rank, neighbor_id, dist2. */
   def knnContacts(df: DataFrame, partitionKey: String, idCol: String,
                   xCol: String, yCol: String, zCol: String,
-                  eps: Double, k: Int): DataFrame = {
-    // the pair set is referenced twice below (one per direction) —
-    // persist the small result so the grid join runs once, and
-    // materialize it eagerly so the two branches read a complete
-    // cache instead of racing to populate it
-    val pairs = contacts3D(df, partitionKey, idCol, xCol, yCol, zCol, eps)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    // contacts are unordered (a<b); each pair serves both endpoints
-    val directed = pairs.select(col(partitionKey), col("a_id").as("id"),
-        col("b_id").as("neighbor_id"), col("dist2"))
-      .unionByName(pairs.select(col(partitionKey), col("b_id").as("id"),
-        col("a_id").as("neighbor_id"), col("dist2")))
-    CacheOps.materializeAndRelease(
-      directed
-        .groupBy(col(partitionKey), col("id"))
-        .agg(graft.expressions.BoundedTopK.boundedTopK(
-          -col("dist2"), col("neighbor_id"), k).as("top"))
-        .select(col(partitionKey), col("id"), posexplode(col("top")))
-        .select(col(partitionKey), col("id"), (col("pos") + 1).as("rank"),
-          col("col.id").as("neighbor_id"), (-col("col.score")).as("dist2")),
-      pairs)
-  }
+                  eps: Double, k: Int): DataFrame =
+    // contacts are unordered (a<b); each pair serves both endpoints.
+    // One explode mirrors it inside the join's stage, so the grid
+    // join runs once without a cache (a two-branch union of the pair
+    // set would run it twice)
+    contacts3D(df, partitionKey, idCol, xCol, yCol, zCol, eps)
+      .select(col(partitionKey), col("dist2"), explode(array(
+        struct(col("a_id").as("id"), col("b_id").as("neighbor_id")),
+        struct(col("b_id").as("id"), col("a_id").as("neighbor_id")))).as("e"))
+      .groupBy(col(partitionKey), col("e.id").as("id"))
+      .agg(graft.expressions.BoundedTopK.boundedTopK(
+        -col("dist2"), col("e.neighbor_id"), k).as("top"))
+      .select(col(partitionKey), col("id"), posexplode(col("top")))
+      .select(col(partitionKey), col("id"), (col("pos") + 1).as("rank"),
+        col("col.id").as("neighbor_id"), (-col("col.score")).as("dist2"))
 
   /** Pairs (a, b) with a.partition == b.partition, |a.v − b.v| <= eps
     * and a.id < b.id. Output columns: partition key, a_id, b_id,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,4 +27,30 @@ object GraftSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSpark.spark
   lazy val sqlImplicits = spark.implicits
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  protected def countJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.GraftTestBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Ids of the RDDs the session holds persisted. */
+  protected def persistedRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Whether the session's cache manager holds no cached plan. */
+  protected def noCachedPlans: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
 }

@@ -29,6 +29,60 @@ class RangeJoinSpec extends SparkSpec {
     assert(out == Seq((1, 2L, 1.0), (2, 3L, 4.0)))
   }
 
+  // 3x3x3 unit cubes: in "p" eps 1.8 reaches the face (dist2 1), edge
+  // (2) and corner (3) neighbours; "q" is scaled by 1.5, so only its
+  // face neighbours (2.25) are in reach. Ranks tie everywhere, and
+  // k = 2 cuts the ties
+  private def tiedGrid = {
+    import sqlImplicits._
+    val cube = for { dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1 }
+      yield (dx.toDouble, dy.toDouble, dz.toDouble)
+    (cube.zipWithIndex.map { case ((x, y, z), i) => ("p", i.toLong + 1, x, y, z) } ++
+      cube.zipWithIndex.map { case ((x, y, z), i) =>
+        ("q", i.toLong + 100, 1.5 * x, 1.5 * y, 1.5 * z) })
+      .toDF("pk", "id", "x", "y", "z")
+  }
+
+  test("knnContacts == the two-branch unionByName top-k (tied dist2, k < ties)") {
+    val pts = tiedGrid
+    val (eps, k) = (1.8, 2)
+    val got = RangeJoin.knnContacts(pts, "pk", "id", "x", "y", "z", eps, k)
+    // reference: each unordered pair mirrored by a union of two scans
+    val pairs = RangeJoin.contacts3D(pts, "pk", "id", "x", "y", "z", eps)
+    val want = pairs.select(col("pk"), col("a_id").as("id"),
+        col("b_id").as("neighbor_id"), col("dist2"))
+      .unionByName(pairs.select(col("pk"), col("b_id").as("id"),
+        col("a_id").as("neighbor_id"), col("dist2")))
+      .groupBy(col("pk"), col("id"))
+      .agg(graft.expressions.BoundedTopK.boundedTopK(
+        -col("dist2"), col("neighbor_id"), k).as("top"))
+      .select(col("pk"), col("id"), posexplode(col("top")))
+      .select(col("pk"), col("id"), (col("pos") + 1).as("rank"),
+        col("col.id").as("neighbor_id"), (-col("col.score")).as("dist2"))
+    assert(got.columns.toSeq == want.columns.toSeq)
+    val rows = got.collect().toSeq
+    assert(rows.sortBy(_.toString) == want.collect().toSeq.sortBy(_.toString))
+    // the centre of each cube has six neighbours tied at the nearest
+    // distance; the lowest two ids win
+    val centre = rows.filter(r => r.getLong(1) == 14L).sortBy(_.getInt(2))
+    assert(centre.map(r => (r.getLong(3), r.getDouble(4))) ==
+      Seq((5L, 1.0), (11L, 1.0)))
+    assert(rows.groupBy(r => (r.getString(0), r.getLong(1))).values
+      .forall(_.length == k))
+  }
+
+  test("knnContacts builds a lazy plan: no job to build, nothing persisted") {
+    val pts = tiedGrid
+    spark.catalog.clearCache()
+    val before = persistedRdds
+    val (knn, jobs) = countJobs(
+      RangeJoin.knnContacts(pts, "pk", "id", "x", "y", "z", 1.8, 2))
+    assert(jobs == 0, s"building knnContacts ran $jobs job(s)")
+    assert(knn.collect().nonEmpty)
+    assert(persistedRdds == before)
+    assert(noCachedPlans)
+  }
+
   test("contacts3D matches brute force exactly") {
     val rnd = new scala.util.Random(7)
     val pts = (1 to 120).map { i =>

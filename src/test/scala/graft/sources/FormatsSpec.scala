@@ -577,6 +577,41 @@ class FormatsSpec extends SparkSpec {
       if (r.isNullAt(1)) null else r.getDouble(1)).toSeq == Seq(2.0, null))
   }
 
+  test("mmcifFields locates the block from one scan: <= 2 jobs, nothing persisted") {
+    // (column, dtype) pairs and rows of one parse
+    def fields(cif: String, category: String, name: String) = {
+      val before = persistedRdds
+      val (df, jobs) = countJobs(
+        StructureFormats.mmcifFields(spark, writeTmp(name, cif), category))
+      assert(jobs <= 2, s"building mmcifFields ran $jobs jobs")
+      val rows = df.collect().map(_.toSeq).toSeq
+      assert(persistedRdds == before, "mmcifFields left a persisted RDD")
+      (df.schema.map(f => f.name -> f.dataType.typeName), rows)
+    }
+    val longs = Seq("x" -> "long", "y" -> "long")
+    // '#' lines before the block: the terminator is the first '#'
+    // after the header run, not the first '#' in the file
+    assert(fields("data_t\n#\n# note\n#\nloop_\n_a.x\n_a.y\n1 2\n3 4\n#\n" +
+        "_z.k v\n#\n", "_a.", "hash.cif") ==
+      (longs, Seq(Seq(1L, 2L), Seq(3L, 4L))))
+    // a preceding line holding 'loop_' past column 1 opens a loop_
+    // block too (the reference tests `'loop_' in line`)
+    assert(fields("data_t\n#\n  loop_\n_b.x\n_b.y\n5 six\n#\n", "_b.",
+        "indent.cif") == (Seq("x" -> "long", "y" -> "string"), Seq(Seq(5L, "six"))))
+    // ...but 'loop_' two lines up does not: key-value form
+    assert(fields("data_t\nloop_\n#\n_c.x 7\n_c.y eight\n#\n", "_c.",
+        "kv.cif") == (Seq("x" -> "long", "y" -> "string"), Seq(Seq(7L, "eight"))))
+    // a category that recurs later: only the first contiguous run is
+    // the block, in both forms
+    assert(fields("data_t\n#\nloop_\n_d.x\n_d.y\n1 2\n#\n_d.x 9\n#\n",
+        "_d.", "recur.cif") == (longs, Seq(Seq(1L, 2L))))
+    assert(fields("data_t\n#\n_e.x 1\n_e.y 2\n#\n_e.z 3\n#\n", "_e.",
+        "recur2.cif") == (longs, Seq(Seq(1L, 2L))))
+    // an empty loop_ body gives no dtype evidence: string columns
+    assert(fields("data_t\n#\nloop_\n_f.x\n_f.y\n#\n", "_f.", "empty.cif") ==
+      (Seq("x" -> "string", "y" -> "string"), Seq()))
+  }
+
   test("mmcifFields raises on absent category and unterminated blocks") {
     val path = writeTmp("meta3.cif", mmcifMeta)
     intercept[IllegalArgumentException](
