@@ -2600,8 +2600,8 @@ object SparkEntry {
       val pqRefine = Similarity.recallAtK(
           Pq.refineTopK(short10, emb, probes, 5), exactPq10, 5)
         .withColumn("index", lit("pq_refine"))
-      // the PUBLISHED operating point (the PROF_ANN grid's pick,
-      // r16): m = dim/4 subspaces × 16 codewords, kAdc = 5×k
+      // the PUBLISHED operating point (the r16 recall grid's pick,
+      // BASELINE.md): m = dim/4 subspaces × 16 codewords, kAdc = 5×k
       // shortlist, exact refine — measured 0.91 recall@10 at sf0.1
       // vs 0.10 for the starved m=4/k=8/kAdc=2×k mechanism setting;
       // the grid's three levers in BASELINE.md's table

@@ -1258,7 +1258,7 @@ object Corpus {
     * collect, one tiny shuffle (the fit aggregation). Nothing is
     * cached — both passes are codegen scan pipelines and rebuilding
     * the second costs less than materializing an instance cache
-    * (measured, PROF_LANGID). */
+    * (measured by a stage breakdown of q_langid_model). */
   def langIdModel(docs: DataFrame, nBuckets: Int = 256,
                   idCol: String = "doc_id", textCol: String = "text",
                   langCol: String = "lang"): DataFrame = {

@@ -1,7 +1,7 @@
 package org.apache.spark
 
-/** Test hook into Spark's internals: block until every queued listener
+/** Hook into Spark's internals: block until every queued listener
   * event has been delivered, so a listener's counts are complete. */
-object GraftTestBus {
+object GraftBus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -36,11 +36,11 @@ abstract class SparkSpec extends AnyFunSuite {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    org.apache.spark.GraftTestBus.drain(sc)
+    org.apache.spark.GraftBus.drain(sc)
     sc.addSparkListener(l)
     try {
       val out = body
-      org.apache.spark.GraftTestBus.drain(sc)
+      org.apache.spark.GraftBus.drain(sc)
       (out, jobs.get)
     } finally sc.removeSparkListener(l)
   }
