@@ -283,34 +283,6 @@ object Dedup {
       base, prefix)
   }
 
-  /** MinHash signatures + band keys + per-doc LSH candidate count.
-    * Always non-empty (one row per doc); candidate generation is the
-    * band-key equi-join. Verified near-dup pairs available via
-    * [[minhashPairs]]. */
-  def minhashProfile(docs: DataFrame, numHashes: Int = 16, bands: Int = 4,
-                     shingleN: Int = 3, idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
-    val sigs = docs.select(
-      col(idCol).as("id"),
-      HashFunctions.minhashSignature(
-        TextFunctions.shingles(TextFunctions.tokens(col(textCol)), shingleN),
-        numHashes).as("sig"))
-    val banded = sigs.select(col("id"), col("sig"),
-      explode(HashFunctions.bandKeys(col("sig"), bands, numHashes / bands)).as("bk"))
-    val cands = banded.alias("x")
-      .join(banded.alias("y"),
-        col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id"), col("y.id").as("cand"))
-      .distinct()
-    val counts = cands.groupBy("id").agg(count(lit(1)).as("n_candidates"))
-    sigs
-      .join(counts, Seq("id"), "left")
-      .select(col("id").as("doc_id"),
-        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-        col("sig")(0).as("mh0"), col("sig")(1).as("mh1"),
-        col("sig")(2).as("mh2"), col("sig")(3).as("mh3"))
-  }
-
   /** Verified MinHash near-dup pairs, staged for 100 TB:
     *
     *  1. band-key equi-join carries ONLY (id, bandkey) — no arrays;

@@ -7,16 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session across all suites (JVM-wide). */
 object GraftSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val s = Sessions.local(4,
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -2,8 +2,8 @@ package graft
 
 /** Cached-state leak guard for the structure queries: a long-lived
   * session must not collect persisted RDDs or cached plans from one
-  * call to the next. Each query of the benchmark's
-  * `structure_interactive` workload (`STRUCTURE_QUERIES` in
+  * call to the next. Each query tagged "structure" (the benchmark's
+  * `structure_interactive` workload, `STRUCTURE_QUERIES` in
   * perfbench/run.py) is built and collected, and the session's
   * persisted RDDs and cache manager must be back at their baseline.
   */
@@ -11,20 +11,23 @@ class StructureLeakSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private val structureQueries = Seq(
-    "q_filter_eq", "q_filter_in", "q_filter_not", "q_project_exclude",
-    "q_cast_types", "q_explode_split", "q_collapse_group",
-    "q_derive_concat_key", "q_recode_class", "q_scaled_ratio",
-    "q_rsa_methods", "q_annotation_agg", "q_sifts_wide", "q_sifts_residues",
-    "q_table_merger", "q_filter_structures", "q_centroid", "q_agg_first",
-    "q_seq_concat", "q_seq_mismatch", "q_mmcif_fields", "q_mmcif_oper",
-    "q_structure_pipeline", "q_dssp_full_chain", "q_range_join_contacts",
-    "q_knn_contacts", "q_validation_roundtrip", "q_gff_roundtrip",
-    "q_fasta_roundtrip")
+  private val structureQueries =
+    SparkEntry.records.filter(_.tags("structure")).map(_.name)
 
   test("the leak guard covers the 29 structure_interactive queries") {
     assert(structureQueries.distinct.length == 29)
     assert(structureQueries.forall(SparkEntry.queries.contains))
+  }
+
+  test("the structure tag names exactly the benchmark's STRUCTURE_QUERIES") {
+    val runPy = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("perfbench/run.py")), "UTF-8")
+    val list = "(?s)\nSTRUCTURE_QUERIES = \\[(.*?)\\]".r
+      .findFirstMatchIn(runPy).map(_.group(1))
+      .getOrElse(fail("perfbench/run.py has no STRUCTURE_QUERIES list"))
+    val benched = "\"(q_\\w+)\"".r.findAllMatchIn(list).map(_.group(1)).toSeq
+    assert(benched.length == 29)
+    assert(structureQueries.toSet == benched.toSet)
   }
 
   for (q <- structureQueries)

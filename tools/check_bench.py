@@ -1,47 +1,49 @@
 #!/usr/bin/env python3
 """Adjudicate bench noise mechanically: diff a graft.Bench detail file
-against the per-query envelope recorded in BASELINE.md and print every
-query more than FACTOR x its recorded time (the co-tenant-spike
+against the per-query envelope of a committed clean run and print every
+query more than FACTOR x its envelope time (the co-tenant-spike
 pattern this host shows 2-5x of, documented in BASELINE.md).
 
-Usage: check_bench.py <bench_detail.json> [factor=2.0] [baseline=BASELINE.md]
+Usage: check_bench.py <bench_detail.json> [factor=2.0] [envelope=BENCH_detail_r18_min3.json]
+
+The envelope is the "queries" map (name -> seconds) of a graft.Bench
+detail file; the default is the clean sf0.1 min-of-3 run of r18, which
+has one entry for each of the 262 queries and no failed one.
 
 Exit code 0 = all inside the envelope; 1 = spikes listed (re-measure
 them isolated: SPARK_GRAFT_ONLY=<q> SPARK_GRAFT_REPS=3 before calling
-a plan regression). Queries absent from the envelope (new this round)
-are listed informationally and do not fail the check.
+a plan regression); 2 = no usable envelope or detail map. Queries
+absent from the envelope (new since it was recorded) are listed
+informationally and do not fail the check.
 """
 import json
 import os
-import re
 import sys
 
 
-def load_envelope(baseline_path):
-    """Parse the `| query | spark s | duckdb s | ratio |` table rows."""
-    env = {}
-    with open(baseline_path) as f:
-        for line in f:
-            m = re.match(r"\|\s*(q_?\w+)\s*\|\s*([0-9.]+)\s*\|", line)
-            if m:
-                env[m.group(1)] = float(m.group(2))
-    return env
-
-
-def main(detail_path, factor=2.0, baseline_path=None):
-    if baseline_path is None:
-        baseline_path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-            if os.path.basename(os.path.dirname(os.path.abspath(__file__)))
-            == "tools" else ".", "BASELINE.md")
-    env = load_envelope(baseline_path)
-    if not env:
-        print(f"no envelope table found in {baseline_path}", file=sys.stderr)
-        return 2
-    detail = json.load(open(detail_path))
+def per_query(path):
+    """The name -> seconds map of a graft.Bench detail file, or None."""
+    detail = json.load(open(path))
     queries = detail.get("queries", detail)
-    if not (isinstance(queries, dict)
+    if (isinstance(queries, dict)
             and all(isinstance(v, (int, float)) for v in queries.values())):
+        return queries
+    return None
+
+
+def main(detail_path, factor=2.0, envelope_path=None):
+    if envelope_path is None:
+        envelope_path = os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "BENCH_detail_r18_min3.json")
+    env = per_query(envelope_path)
+    if not env:
+        print(f"no per-query envelope in {envelope_path}", file=sys.stderr)
+        return 2
+    # a failed query (-1) in the envelope run bounds nothing
+    env = {name: t for name, t in env.items() if t >= 0}
+    queries = per_query(detail_path)
+    if queries is None:
         # driver-captured BENCH_r*.json wraps only the summary line —
         # the per-query map lives in graft.Bench's target/bench_detail.json
         print(f"{detail_path} has no per-query map; point this at a "
